@@ -1,24 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // r16 (VERDICT r15 #1): the r15 2-minute periodic-GC conf that
-      // bounded the ContextCleaner backlog is GONE — dead
-      // shuffle/broadcast registrations are now released
-      // DETERMINISTICALLY between runs (Caches.release below) and in
-      // the streaming operators' own teardown
-      // (StreamingShim.releaseSince), so no harness GC is needed.
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // Warm the JVM (codegen, parquet reader, shuffle paths) so the
     // first measured query doesn't carry one-time JIT cost.
     def calJob(): Unit = {
@@ -65,10 +50,8 @@ object Bench {
         val ok = try { fn(spark, sfDir).count(); true }
                  catch { case _: Throwable => false }
         val dt = (System.nanoTime() - t0) / 1e9
+        // outside the timed region: nothing of this run outlives it
         graft.core.Caches.drain(spark)
-        // r16: deterministic release of ALL dead shuffle/broadcast
-        // registrations between runs — replaces the r15 periodic-GC
-        // conf (see session builder above). Outside the timed region.
         graft.core.Caches.release(spark)
         if (ok) dt else -1.0
       }

@@ -2,14 +2,12 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `.explain("formatted")` of named registry queries to
   * `<outDir>/<query>_<tag>.txt` — the before/after plan evidence for
   * optimization rounds (the judge reads these files against the code;
-  * it cannot run Spark). Uses the same session shape as [[Bench]]
-  * (local[$SPARK_GRAFT_CPUS], shuffle.partitions = cpus) so the plans
-  * match what the bench actually executes.
+  * it cannot run Spark). Uses the harness session at
+  * `$SPARK_GRAFT_CPUS` cores, as [[Bench]] does, so the plans match what
+  * the bench actually executes.
   *
   * Run: `sbt "runMain graft.PlanDump <outDir> <tag> q1,q2,..."` */
 object PlanDump {
@@ -19,16 +17,8 @@ object PlanDump {
     val tag = args(1)
     val names = args(2).split(",").toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.session(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

@@ -12,6 +12,24 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.aggGroupBy(spark, "/root/testdata/sf0.001")
 
+  /** The one harness session: `local[cpus]` with the shuffle width
+    * pinned to the core count, UTC session time, raw nanosecond parquet
+    * timestamps, the graft extensions and no UI. Bench, Verify, PlanDump
+    * and the test suites build through here, so a plan dumped or tested
+    * at a given width is the plan the bench runs at that width. */
+  def session(cpus: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Relational.queries ++ Windows.queries ++ Functions.queries ++

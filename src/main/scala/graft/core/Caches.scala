@@ -36,24 +36,28 @@ object Caches {
   }
 
   /** Release EVERY driver-side shuffle and broadcast registration in
-    * the session (r16 — VERDICT r15 #1/#2 follow-through): the
-    * weak-reference ContextCleaner only reclaims dead registrations
-    * when the JVM happens to GC, so a session that runs hundreds of
-    * queries back-to-back accumulates map-output statuses, shuffle
-    * files on local disk, and block-manager broadcast entries until
-    * late queries run against a degraded JVM (measured r15:
-    * stream_update_sink 4.5 s isolated vs 7.6 s at position ~270).
-    * This sweep unregisters them all deterministically through the
-    * ContextCleaner's own cleanup path — no System.gc involved.
+    * the JVM. The weak-reference ContextCleaner only reclaims dead
+    * registrations when the JVM happens to GC, so a session that runs
+    * hundreds of queries back-to-back accumulates map-output statuses,
+    * shuffle files on local disk and block-manager broadcast entries,
+    * and late queries run against a degraded JVM. This sweep
+    * unregisters them all deterministically through the cleaner's own
+    * cleanup path, with no System.gc.
     *
     * HARNESS-ONLY, and stronger than [[drain]]: it assumes NOTHING in
-    * the session still depends on any past shuffle or broadcast —
-    * true between bench/verify runs after [[drain]] (caches cleared,
-    * queries rebuilt from parquet per run), false inside a live query
-    * or an embedding application. Call [[drain]] first. */
+    * the JVM still depends on any past shuffle or broadcast. That holds
+    * between harness runs after [[drain]] (caches cleared, queries
+    * rebuilt from parquet per run) because cross-query memoized state
+    * ([[Fixtures.memo]]) holds staged PATHS only, never DataFrames or
+    * broadcasts; a memo of a Spark-side object would break later
+    * queries with missing-block errors. It is false inside a live query
+    * or beside another thread's work, so the sweep is skipped unless
+    * the session is idle: no active streaming query and no active job.
+    * Call [[drain]] first. */
   def release(spark: SparkSession): Unit = {
-    if (spark.streams.active.nonEmpty) return
-    org.apache.spark.sql.graft.StreamingShim.releaseSince(
-      spark, (Set.empty[Int], Set.empty[Long]))
+    val shim = org.apache.spark.sql.graft.StreamingShim
+    if (shim.listenersSettled(spark) && spark.streams.active.isEmpty &&
+        spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+      shim.releaseAll(spark)
   }
 }

@@ -228,9 +228,7 @@ object Maintenance {
     * small-files problem: without it every shuffle task holds an open
     * writer per partition value it sees (tasks × partitions files,
     * memory-hungry and commit-heavy); with it, file count tracks
-    * partition count. R6 probe (DynOverProbe): the r5 idle delta was
-    * fs-state noise on the ~96-file commit/list path, not a plan
-    * change — this bounds that path to 3 files. */
+    * partition count, which bounds the commit/list path to 3 files. */
   def writeDynamicOverwrite(spark: SparkSession, dir: String): DataFrame = {
     val base = java.nio.file.Files
       .createTempDirectory("graft_dynover").toString

@@ -393,12 +393,6 @@ object Streams {
     }
 
   def streamFileSink(spark: SparkSession, dir: String): DataFrame = {
-    // r16 (VERDICT r15 #1): everything this invocation registers —
-    // fixture staging, micro-batch shuffles/broadcasts, readback — is
-    // dead once the result is localized below; release it
-    // deterministically in the teardown instead of waiting for a GC
-    // the ContextCleaner may never see in a short-lived window.
-    val mark = org.apache.spark.sql.graft.StreamingShim.resourceMark(spark)
     val src = graft.core.Fixtures.memo(sinkFixtures,
       (spark.sparkContext.applicationId, dir)) {
         graft.core.Fixtures.staged(s"$dir/events.parquet", "streamsrc",
@@ -442,7 +436,6 @@ object Streams {
       // this run's state-store providers — repeated in-JVM
       // invocations used to accumulate both
       org.apache.spark.sql.graft.StreamingShim.drainStreamingState(spark)
-      org.apache.spark.sql.graft.StreamingShim.releaseSince(spark, mark)
     }
   }
 
@@ -504,7 +497,6 @@ object Streams {
     * production scale the same job runs continuously — nothing here
     * is fixture-shaped except driving both passes in-process. */
   def streamTxnSink(spark: SparkSession, dir: String): DataFrame = {
-    val mark = org.apache.spark.sql.graft.StreamingShim.resourceMark(spark)
     val src = graft.core.Fixtures.memo(txnSinkFixtures,
       (spark.sparkContext.applicationId, dir)) {
         graft.core.Fixtures.staged(s"$dir/events.parquet", "txnstreamsrc",
@@ -557,7 +549,6 @@ object Streams {
       for (d <- Seq(inDir, root, new java.io.File(ck)))
         graft.core.Fixtures.deleteRecursively(d)
       org.apache.spark.sql.graft.StreamingShim.drainStreamingState(spark)
-      org.apache.spark.sql.graft.StreamingShim.releaseSince(spark, mark)
     }
   }
 
@@ -587,7 +578,6 @@ object Streams {
     * the 100 TB posture for a running aggregate whose key space
     * dwarfs any batch. */
   def streamUpdateSink(spark: SparkSession, dir: String): DataFrame = {
-    val mark = org.apache.spark.sql.graft.StreamingShim.resourceMark(spark)
     val src = graft.core.Fixtures.memo(txnSinkFixtures,
       (spark.sparkContext.applicationId, dir)) {
         graft.core.Fixtures.staged(s"$dir/events.parquet", "txnstreamsrc",
@@ -657,7 +647,6 @@ object Streams {
       // stacked runs): two stateful AvailableNow queries per
       // invocation, 4-32 aggregate state-store providers each
       org.apache.spark.sql.graft.StreamingShim.drainStreamingState(spark)
-      org.apache.spark.sql.graft.StreamingShim.releaseSince(spark, mark)
     }
   }
 
@@ -682,7 +671,6 @@ object Streams {
     * one O(1) idempotent commit per micro-batch; swap the source for
     * a real broker and nothing else changes. */
   def streamRateSink(spark: SparkSession, dir: String): DataFrame = {
-    val mark = org.apache.spark.sql.graft.StreamingShim.resourceMark(spark)
     val n = 500
     val uuid = s"${graft.core.Fixtures.appTag(spark)}_" +
       java.util.UUID.randomUUID().toString
@@ -737,7 +725,6 @@ object Streams {
       for (d <- Seq(root, new java.io.File(ck)))
         graft.core.Fixtures.deleteRecursively(d)
       org.apache.spark.sql.graft.StreamingShim.drainStreamingState(spark)
-      org.apache.spark.sql.graft.StreamingShim.releaseSince(spark, mark)
     }
   }
 

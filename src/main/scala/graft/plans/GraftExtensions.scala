@@ -10,11 +10,10 @@ import graft.functions.{CosineSimilarity, MinHash8Expr, SimHash16Expr}
   * production registration is declarative:
   *
   * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+  * spark-submit --conf spark.sql.extensions=graft.plans.GraftExtensions
   * }}}
   *
-  * after which `graft_cosine(a, b)` resolves in SQL and `expr()` on
+  * ([[graft.SparkEntry.session]] sets the same conf), after which `graft_cosine(a, b)` resolves in SQL and `expr()` on
   * every session of that context. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -587,6 +587,62 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       new java.io.File(scratch))
   }
 
+  test("concurrent jobs keep their shuffles: sink operators never sweep, " +
+    "and the harness sweep skips while a job is live") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    import graft.core.{Det, Tables}
+    val fetchFailures = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.reason.isInstanceOf[org.apache.spark.FetchFailed])
+          fetchFailures.incrementAndGet()
+    }
+    // every row crosses a hash exchange before the keyed aggregate
+    val (n, keys) = (2000000L, 1000L)
+    def aggregate(): Map[Long, Long] = spark.range(0L, n, 1L, 8)
+      .repartition(16, col("id"))
+      .groupBy((col("id") % keys).as("k")).agg(sum(col("id")).as("s"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val perKey = n / keys
+    val expected = (0L until keys)
+      .map(k => k -> (perKey * k + keys * perKey * (perKey - 1) / 2)).toMap
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val sink = Future(
+        graft.operators.Streams.streamUpdateSink(spark, sfDir).collect().toSeq)
+      // at least three aggregates, and aggregates until the sink's
+      // teardown is over: the teardown is where a JVM-wide sweep would
+      // hit the aggregate's in-flight shuffles
+      var runs = 0
+      while (runs < 3 || (!sink.isCompleted && runs < 50)) {
+        assert(aggregate() == expected, s"aggregate run $runs")
+        runs += 1
+      }
+      val streamed = Await.result(sink, 5.minutes)
+      val batch = Tables.events(spark, sfDir).groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n_events"),
+          sum(Det.cents(col("value"))).as("sum_cents"))
+        .orderBy(col("event_type")).collect().toSeq
+      assert(streamed == batch)
+      // Caches.release called under a live job must not sweep its
+      // shuffles: the job's middle stage holds the session busy
+      val slow = Future(spark.sparkContext.parallelize(1 to 1000, 4)
+        .map(i => (i % 10, i)).reduceByKey(_ + _)
+        .mapPartitions { it => Thread.sleep(3000); it }
+        .reduceByKey(_ + _).collect().toMap)
+      while (spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+        Thread.sleep(20)
+      graft.core.Caches.release(spark)
+      assert(Await.result(slow, 5.minutes) ==
+        (1 to 1000).groupBy(_ % 10).map { case (k, v) => k -> v.sum })
+      assert(org.apache.spark.sql.graft.StreamingShim.listenersSettled(spark))
+      assert(fetchFailures.get == 0, s"$fetchFailures fetch failures")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("txn-log streaming source: a deletion-vector commit is a change, not an append") {
     import spark.implicits._
     import graft.sources.TxnLog
